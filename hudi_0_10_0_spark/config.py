@@ -198,20 +198,14 @@ class WriteConfig:
     # scale curve — see SCALE.md)
     mor_bypass_broadcast_budget_bytes: int = 64 << 20
     mor_bypass_fixed_overhead_bytes: int = 64 << 20
-    # COW pure-delete fast path (optimization r8): tombstone keys small
-    # enough to broadcast (~120 B/key framed) rewrite the touched groups
-    # via a broadcast LEFT ANTI join — the stored side streams from the
-    # scan without shuffling. Larger delete batches keep the one-shuffle
-    # merge kernel. 0 disables the fast path.
-    delete_antijoin_broadcast_budget_bytes: int = 64 << 20
-    # COW trickle-upsert fast path (optimization r9): when the incoming
-    # update rows fit this broadcast budget (estimated from the profile
-    # counts x a schema-derived row width), touched groups rewrite via
-    # stored LEFT OUTER JOIN broadcast(incoming winners) + the same
-    # payload expressions — the stored side streams from the scan with
-    # ZERO shuffle (the reference merge-handle's stream-base/probe-map
-    # algorithm; the union+window kernel is its sort-merge analogue for
-    # oversized batches). 0 disables the fast path.
+    # The single COW reconcile budget (upsert, delete, MERGE INTO): when
+    # the incoming update/tombstone rows fit it (estimated from the
+    # profile counts x a schema-derived row width), touched groups
+    # rewrite via stored LEFT OUTER JOIN broadcast(incoming winners) +
+    # the payload expressions — the stored side streams from the scan
+    # with ZERO shuffle (the reference merge-handle's stream-base/
+    # probe-map algorithm; the union+window kernel is its sort-merge
+    # analogue for oversized batches). 0 always runs the kernel.
     upsert_broadcast_budget_bytes: int = 64 << 20
     # Virtual keys (hoodie.populate.meta.fields,
     # HoodieTableConfig.java:159-163): when False, data files carry NO

@@ -155,9 +155,8 @@ def merge_stored_and_incoming(
     # Reference per-row stored semantics (HoodieMergeHandle.write,
     # client/io/HoodieMergeHandle.java:315-360): EVERY stored row probes
     # the incoming map independently — duplicate STORED keys each merge
-    # with the incoming winner and each emit (the r8 delete anti-join
-    # matched this; since r9 the kernel does too, so fast path and
-    # kernel agree on every shape regardless of broadcast budgets).
+    # with the incoming winner and each emit (the broadcast path does
+    # too, so both agree on every shape regardless of the budget).
     # Expressed as ONE window over the same single exchange the old
     # groupBy formulation used (HashPartitioning on (fid, partition)
     # satisfies the window's ClusteredDistribution on (fid, partition,
@@ -248,13 +247,18 @@ def broadcast_merge_stored(
     payload: Payload,
     instant: str,
 ) -> DataFrame:
-    """Trickle-upsert fast path (optimization r9, guide §3.1): the
-    reference merge-handle's actual algorithm — stream the stored base
-    rows, probe a hash map of the incoming batch
+    """Broadcast reconcile of a COW rewrite (upsert, delete, MERGE INTO):
+    the reference merge-handle's actual algorithm — stream the stored
+    base rows, probe a hash map of the incoming batch
     (``HoodieMergeHandle.write``: keyToNewRecords probe per old record)
     — said directly as ``stored LEFT OUTER JOIN broadcast(incoming)``.
     The stored side never shuffles; the union+window kernel remains the
     sort-merge analogue for batches past the broadcast budget.
+
+    A delete is the same reconcile with ``EmptyPayload`` tombstones (the
+    reference's ``SparkDeleteHelper``): every matched stored row is
+    dropped by the ``finish_merge_frame`` filter, and unmatched rows
+    stream through with their original commit time and seqno.
 
     Equivalence contract with ``merge_stored_and_incoming`` (same
     ``finish_merge_frame`` tail, pinned by tests):
@@ -263,7 +267,9 @@ def broadcast_merge_stored(
       index tagging against the same base files; the caller gates this
       path off for log-bearing slices where tombstones could remove a
       tagged key from the stored view) — so the kernel's new-only
-      take_new outputs cannot arise here and LEFT OUTER is exhaustive;
+      take_new outputs cannot arise here and LEFT OUTER is exhaustive.
+      The gate costs deletes nothing: a MOR ``EmptyPayload`` delete is
+      always a deltacommit, so it never rewrites a log-bearing slice;
     - ``new`` must already be collapsed to ONE row per (fid, partition,
       key) — same precombine/arrival-order winner the kernel's window
       picks;
@@ -436,11 +442,15 @@ def precombine_dedup(incoming: DataFrame, payload: Payload, global_key: bool) ->
         # resolve to the LAST-arriving duplicate, matching the merge
         # kernel's map-put-last semantics
         order = order + [F.col(ARRIVAL_ORDER_COL).desc_nulls_last()]
-    if not order:
-        order = [F.lit(1)]
+    return first_per_key(incoming, keys, order or [F.lit(1)])
+
+
+def first_per_key(df: DataFrame, keys: list, order: list) -> DataFrame:
+    """The one winner-per-key idiom: keep the first row of each ``keys``
+    group under ``order`` (a whole row, never a per-column blend)."""
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        incoming.withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )

@@ -52,6 +52,7 @@ from .merge import (
     ARRIVAL_ORDER_COL,
     bq,
     broadcast_merge_stored,
+    first_per_key,
     merge_stored_and_incoming,
     mor_merge_window,
     precombine_dedup,
@@ -862,8 +863,7 @@ def _pure_insert_frame(
     over the full merge-frame column shape (typed-null old__<c> side
     included) so conditions referencing the target alias — 'WHEN NOT
     MATCHED AND t.v IS NULL' — resolve exactly like in the kernel, then
-    drop delete-marked rows. Shared by the no-touched-groups bypass and
-    the r9 trickle fast path's insert part."""
+    drop delete-marked rows. Used by ``_append_frame``."""
     gate = payload.pure_insert_gate()
     if gate is not None:
         from ..payloads import HAS_NEW, HAS_OLD, NEW, OLD
@@ -917,7 +917,7 @@ def _project_write_shape(
 ) -> DataFrame:
     """Project to the written column shape (meta cols then data cols,
     typed NULLs for absent columns) as ONE selectExpr — shared by the
-    insert-rewrite passthrough/append and the trickle insert append
+    stored passthrough of ``append`` and every insert append
     (optimization r9, guide §4: one py4j call for the whole width)."""
     have = set(df.columns)
     return df.selectExpr(
@@ -934,12 +934,54 @@ def _project_write_shape(
     )
 
 
+def _append_frame(
+    src: DataFrame, payload, data_cols: list[str], col_types: dict[str, str],
+    instant: str, packed_fids: set,
+) -> DataFrame:
+    """Incoming rows no stored row can match, ready for the
+    pre-partitioned writer: the payload's pure-insert gate, the meta
+    stamp, the written column shape, and one exchange by file group.
+    The one insert append of every COW reconcile strategy."""
+    live = _pure_insert_frame(src, payload, data_cols, col_types)
+    return _project_write_shape(
+        _stamp_meta(live, instant), data_cols, col_types
+    ).repartition(
+        max(1, len(packed_fids)) + 8, F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL)
+    )
+
+
+def _choose_reconcile(
+    operation: WriteOperation, old_slices: list, merge_bytes: int, budget: int
+) -> str:
+    """The COW rewrite's reconcile strategy, from driver-side facts only:
+
+    - ``fresh``: the batch touches no stored slice — write it as inserts;
+    - ``append``: INSERT never consults the index — stored rows pass
+      through unchanged and the inserts are appended;
+    - ``broadcast``: no touched slice carries logs and ``merge_bytes``
+      (incoming merge rows x ``_est_merge_row_bytes``) fits ``budget`` —
+      ``broadcast_merge_stored`` (upsert, delete and MERGE INTO alike);
+    - ``kernel``: everything else — ``merge_stored_and_incoming``.
+
+    A budget of 0 disables ``broadcast``. Log-bearing slices need the
+    kernel: a log tombstone can remove a tagged key from the merged
+    stored view, and the unmatched incoming row must then re-insert
+    through the kernel's new-only path."""
+    if not old_slices:
+        return "fresh"
+    if operation == WriteOperation.INSERT:
+        return "append"
+    if 0 < budget and merge_bytes <= budget and not any(s.logs for s in old_slices):
+        return "broadcast"
+    return "kernel"
+
+
 def _est_merge_row_bytes(data_cols: list[str], col_types: dict[str, str]) -> int:
-    """Framed-row estimate for the trickle-upsert broadcast gate: fixed
+    """Framed-row estimate for the broadcast reconcile gate: fixed
     UnsafeRow/key overhead + a per-column width guess (variable-width
     types at 32 B, fixed-width at 8 B). Deliberately rough — the budget
     only has to keep the broadcast orders of magnitude under executor
-    memory, exactly like the delete path's flat 120 B/key."""
+    memory."""
     var_width = ("string", "binary", "array", "map", "struct", "decimal")
     est = 48
     for c in data_cols:
@@ -1032,14 +1074,15 @@ def run_batch_write(
     instant_time: str | None = None,
     pre_tagged: bool = False,
 ) -> str:
-    """``pre_tagged=True``: the incoming frame's ``_hoodie_file_id``
+    """upsert / insert / bulk_insert / delete, COW and MOR.
+
+    ``pre_tagged=True``: the incoming frame's ``_hoodie_file_id``
     column is trusted as the record's current location, skipping the
     index-tagging join. Only safe when the rows were just read from this
     table (UPDATE/DELETE ... WHERE — read→modify→write in one call under
     the single-writer assumption); the reference's analogue is the
     tagged ``currentLocation`` a ``HoodieRecord`` keeps when the caller
     supplies already-located records."""
-    """upsert / insert / bulk_insert / delete, COW and MOR."""
     cfg = table.cfg
     cfg.validate_virtual_keys()
     validate_callback_config(cfg)  # fail fast, never post-commit
@@ -1263,9 +1306,7 @@ def run_batch_write(
                 ts for ts, groups in plans.items() if groups & update_groups
             }
             if conflict_instants:
-                strategy = getattr(
-                    table.cfg, "clustering_updates_strategy", "REJECT"
-                ).upper()
+                strategy = cfg.clustering_updates_strategy.upper()
                 if strategy in ("ALLOW_ROLLBACK", "ALLOW", "ROLLBACK"):
                     from .services import rollback_instant
 
@@ -1304,25 +1345,24 @@ def run_batch_write(
             write_instant_files(table, out, instant, n_groups)
         else:
             # COW: rewrite every affected file group (updates + packed
-            # inserts), merging with stored rows; fresh groups come along
-            # in the same pass with an empty old side.
-            touched = set(update_groups)
-            for sl in view.latest_file_slices():
-                if (sl.partition, sl.file_id) in packed_fids:
-                    touched.add((sl.partition, sl.file_id))
-            old_slices = [
-                s
-                for s in view.latest_file_slices()
-                if (s.partition, s.file_id) in touched
-            ]
-            all_new = (
-                assigned_inserts
-                if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT)
-                else updates.unionByName(assigned_inserts, allowMissingColumns=True)
+            # inserts), reconciled by the strategy _choose_reconcile
+            # picks; fresh groups come along in the same pass.
+            slices = view.latest_file_slices()
+            touched = set(update_groups) | {
+                (s.partition, s.file_id)
+                for s in slices
+                if (s.partition, s.file_id) in packed_fids
+            }
+            old_slices = [s for s in slices if (s.partition, s.file_id) in touched]
+            n_upd = sum(r[2] for r in profile if r[1] is not None)
+            reconcile = _choose_reconcile(
+                operation,
+                old_slices,
+                n_upd * _est_merge_row_bytes(data_cols, col_types),
+                cfg.upsert_broadcast_budget_bytes,
             )
-
-            if old_slices:
-                n_parts = max(len(touched), 1) + 8
+            n_parts = max(len(touched), 1) + 8
+            if reconcile != "fresh":
                 from ..sources.read import _merge_slices, slices_to_df
 
                 if any(s.logs for s in old_slices):
@@ -1332,167 +1372,74 @@ def run_batch_write(
                     # slices — reading base files alone would silently
                     # drop uncompacted deltacommit updates/deletes when
                     # the new base supersedes the slice (the logs detach)
-                    old = _merge_slices(table, old_slices)
-                    old = old.filter(
+                    old = _merge_slices(table, old_slices).filter(
                         ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
                     )
                 else:
                     old = slices_to_df(table, old_slices)
-                if operation in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
-                    # insert never consults the index: duplicates of
-                    # existing keys are APPENDED, not merged — i.e. the
-                    # rewrite needs NO reconciliation at all (reference
-                    # create-handle writes every row; stored rows are
-                    # copied over unchanged). Say that directly
-                    # (optimization r9): stored rows of the touched
-                    # groups stream through from the scan byte-identical
-                    # (original commit time / seqno) and incoming rows
-                    # are stamped and appended. Replaces the r8 shape
-                    # that salted keys through the merge kernel purely
-                    # to defeat its per-key reconcile — the union +
-                    # repartition + per-key window over every stored row
-                    # of the touched groups, plus the uuid salt/strip,
-                    # all disappear (guide §2.4: remove shuffles
-                    # outright).
-                    passthrough = _project_write_shape(
-                        old, data_cols, col_types
-                    )
-                    live = _pure_insert_frame(
-                        all_new, payload, data_cols, col_types
-                    )
-                    appended = _project_write_shape(
-                        _stamp_meta(live, instant), data_cols, col_types
-                    ).repartition(
-                        max(1, len(packed_fids)) + 8,
-                        F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
-                    )
-                    merged = passthrough.unionByName(appended)
-                elif (
-                    is_delete
-                    and payload.name == "empty"
-                    and sum(r[2] for r in profile if r[1] is not None) * 120
-                    <= int(getattr(cfg, "delete_antijoin_broadcast_budget_bytes", 64 << 20))
-                ):
-                    # Pure COW delete (EmptyPayload: every incoming row a
-                    # tombstone, kernel output = stored rows with no
-                    # incoming match): say that directly as a broadcast
-                    # LEFT ANTI join instead of routing (old ∪ keys)
-                    # through the kernel's union + repartition + sort-
-                    # aggregate. Survivors stream straight from the base-
-                    # file scan, byte-identical (original commit time /
-                    # seqno — the kernel's take_new=false path), and the
-                    # stored side never shuffles at all (guide §3.1).
-                    # Gated on the delete-key count from the profile we
-                    # already hold (~120 B/key framed) so a huge delete
-                    # batch keeps the shuffle kernel rather than building
-                    # an oversized broadcast; at 100 TB the delete batch
-                    # is the small side by construction. Scan tasks are
-                    # file-aligned, so the output stays grouped by file
-                    # group for the pre-partitioned writer.
-                    jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                    merged = old.join(
-                        F.broadcast(updates.select(*jk)), jk, "left_anti"
-                    )
-                else:
-                    upd_for_merge = updates
-                    if not needs_combine:
-                        # the reference's HoodieMergeHandle collapses
-                        # duplicate update keys via its keyToNewRecords
-                        # hash map even with preCombine disabled — mirror
-                        # that so the merge groups hold ≤1 incoming row.
-                        # Inserts keep duplicates (create-handle path
-                        # writes every row).
-                        upd_for_merge = precombine_dedup(
-                            updates, payload, global_idx
-                        )
-                        all_new = upd_for_merge.unionByName(
-                            assigned_inserts, allowMissingColumns=True
-                        )
-                    n_upd = sum(r[2] for r in profile if r[1] is not None)
-                    if (
-                        not any(s.logs for s in old_slices)
-                        and n_upd * _est_merge_row_bytes(data_cols, col_types)
-                        <= int(getattr(cfg, "upsert_broadcast_budget_bytes", 64 << 20))
-                    ):
-                        # Trickle-upsert fast path (optimization r9,
-                        # guide §3.1): the incoming batch fits the
-                        # broadcast budget, so reconcile via stored LEFT
-                        # JOIN broadcast(incoming winners) — the stored
-                        # side streams from the base-file scan with ZERO
-                        # shuffle (see broadcast_merge_stored for the
-                        # equivalence contract). Gated off when the
-                        # touched slices carry logs: a log tombstone can
-                        # remove a tagged key from the merged stored
-                        # view, and such an unmatched incoming row must
-                        # re-insert via the kernel's new-only path.
-                        # Index tagging against live base files makes
-                        # every update key provably present in `old`
-                        # otherwise, and inserts provably absent — so
-                        # updates reconcile in the join and inserts
-                        # append without one.
-                        from pyspark.sql import Window
+            if reconcile in ("broadcast", "kernel") and not needs_combine:
+                # the reference's HoodieMergeHandle collapses duplicate
+                # update keys via its keyToNewRecords hash map even with
+                # preCombine disabled — mirror that so the merge groups
+                # hold ≤1 incoming row. Inserts keep duplicates
+                # (create-handle path writes every row).
+                updates = precombine_dedup(updates, payload, global_idx)
 
-                        jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                        ord_col = (
-                            F.col(ARRIVAL_ORDER_COL).desc_nulls_last()
-                            if ARRIVAL_ORDER_COL in upd_for_merge.columns
-                            else F.lit(1)
-                        )
-                        # one winner per (group, key) — the kernel's
-                        # max_by(__ord) map-put-last pick (also collapses
-                        # the identical copies a duplicate-stored-key tag
-                        # join multiplies out)
-                        wk = Window.partitionBy(*jk).orderBy(ord_col)
-                        bc = (
-                            upd_for_merge.withColumn(
-                                "__rnk", F.row_number().over(wk)
-                            )
-                            .filter(F.col("__rnk") == 1)
-                            .drop("__rnk")
-                        )
-                        merged = broadcast_merge_stored(
-                            old, bc, data_cols, col_types, payload, instant
-                        )
-                        ins_src = assigned_inserts
-                        if not needs_combine:
-                            # kernel parity: duplicate insert keys headed
-                            # to the same group collapse by arrival order
-                            wi = Window.partitionBy(*jk).orderBy(ord_col)
-                            ins_src = (
-                                assigned_inserts.withColumn(
-                                    "__rnk", F.row_number().over(wi)
-                                )
-                                .filter(F.col("__rnk") == 1)
-                                .drop("__rnk")
-                            )
-                        live = _pure_insert_frame(
-                            ins_src, payload, data_cols, col_types
-                        )
-                        appended = _project_write_shape(
-                            _stamp_meta(live, instant), data_cols, col_types
-                        ).repartition(
-                            max(1, len(packed_fids)) + 8,
-                            F.col(FILE_ID_COL), F.col(PARTITION_PATH_COL),
-                        )
-                        merged = merged.unionByName(appended)
-                    else:
-                        merged = merge_stored_and_incoming(
-                            old, all_new, data_cols, col_types, payload, instant,
-                            num_partitions=n_parts,
-                        )
-                out = _finalize(merged, data_cols)
-                timer.mark("merge_plan")
-                write_instant_files(
-                    table, out, instant, n_parts, pre_partitioned=True,
+            if reconcile == "fresh":
+                # no stored side: the payload must still veto pure
+                # inserts — e.g. MERGE INTO with no WHEN NOT MATCHED
+                # drops unmatched source rows.
+                merged = _append_frame(
+                    assigned_inserts if operation == WriteOperation.INSERT
+                    else updates.unionByName(assigned_inserts, allowMissingColumns=True),
+                    payload, data_cols, col_types, instant, packed_fids,
+                )
+            elif reconcile == "append":
+                # insert never consults the index: duplicates of existing
+                # keys are APPENDED, not merged (reference create-handle
+                # writes every row). Stored rows of the touched groups
+                # stream through from the scan byte-identical (original
+                # commit time / seqno) — no union + repartition + window
+                # over the stored side at all (guide §2.4).
+                merged = _project_write_shape(old, data_cols, col_types).unionByName(
+                    _append_frame(
+                        assigned_inserts, payload, data_cols, col_types,
+                        instant, packed_fids,
+                    )
+                )
+            elif reconcile == "broadcast":
+                # stored LEFT JOIN broadcast(incoming winners): the stored
+                # side streams from the base-file scan with ZERO shuffle
+                # (see broadcast_merge_stored for the equivalence
+                # contract). Index tagging against live base files makes
+                # every update key provably present in `old` and inserts
+                # provably absent — updates reconcile in the join and
+                # inserts append without one.
+                jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
+                by_arrival = [F.col(ARRIVAL_ORDER_COL).desc_nulls_last()]
+                # one winner per (group, key) — the kernel's max_by(__ord)
+                # map-put-last pick (also collapses the identical copies
+                # a duplicate-stored-key tag join multiplies out); with
+                # preCombine disabled, duplicate insert keys headed to the
+                # same group collapse the same way (kernel parity)
+                merged = broadcast_merge_stored(
+                    old, first_per_key(updates, jk, by_arrival),
+                    data_cols, col_types, payload, instant,
+                ).unionByName(
+                    _append_frame(
+                        assigned_inserts if needs_combine
+                        else first_per_key(assigned_inserts, jk, by_arrival),
+                        payload, data_cols, col_types, instant, packed_fids,
+                    )
                 )
             else:
-                # merge-kernel bypass (no stored side): the payload
-                # must still veto pure inserts — e.g. MERGE INTO with
-                # no WHEN NOT MATCHED drops unmatched source rows.
-                live = _pure_insert_frame(all_new, payload, data_cols, col_types)
-                merged = _stamp_meta(live, instant)
-                out = _finalize(merged, data_cols)
-                write_instant_files(table, out, instant, max(len(touched), 1) + 8)
+                merged = merge_stored_and_incoming(
+                    old, updates.unionByName(assigned_inserts, allowMissingColumns=True),
+                    data_cols, col_types, payload, instant, num_partitions=n_parts,
+                )
+            out = _finalize(merged, data_cols)
+            timer.mark("merge_plan")
+            write_instant_files(table, out, instant, n_parts, pre_partitioned=True)
 
         timer.mark("write")
         stats = collect_write_stats(table, instant, log_fids)

@@ -116,3 +116,71 @@ def test_cow_snapshot_pushdown_and_pruning(spark, tmp_table_path):
     # projection pruning: the scan should not read all 6 columns
     read_schema = plan.split("ReadSchema", 1)[1][:300]
     assert "o_orderpriority" not in read_schema, read_schema
+
+
+def _own_plan_nodes(plan):
+    """Nodes of a physical plan, skipping the plans of cached frames it
+    scans (an InMemoryTableScan keeps those as inner children)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_cow_reconcile_plan_shapes(spark, orders, tmp_table_path, monkeypatch):
+    """The COW rewrite's physical plans, from the frame handed to the
+    writer: the broadcast reconcile (upsert and delete alike) streams the
+    stored file scan into the join with no Exchange, and the kernel
+    shuffles stored ∪ incoming exactly once, by file group."""
+    import dataclasses
+    import re
+
+    from pyspark.sql import functions as F
+
+    from hudi_0_10_0_spark import HudiTable, WriteConfig
+    from hudi_0_10_0_spark.operators import write as W
+
+    written = []
+    orig = W.write_instant_files
+
+    def capture(table, df, *a, **k):
+        written.append(_own_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        return orig(table, df, *a, **k)
+
+    monkeypatch.setattr(W, "write_instant_files", capture)
+    t = HudiTable.create(
+        spark, tmp_table_path,
+        WriteConfig(record_key_field="o_orderkey", partition_field="o_orderpriority",
+                    precombine_field="o_orderdate"),
+    )
+    t.bulk_insert(orders)
+    some = orders.filter(F.col("o_orderkey") % 7 == 0)
+    t.upsert(some.withColumn("o_orderstatus", F.lit("X")))
+    t.delete(some.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_orderpriority"))
+    t.cfg = dataclasses.replace(t.cfg, upsert_broadcast_budget_bytes=0)
+    t.upsert(some.withColumn("o_orderstatus", F.lit("Y")))
+    _, upsert, delete, kernel = written
+
+    for nodes in (upsert, delete):
+        joins = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+        assert len(joins) == 1, [n.nodeName() for n in nodes]
+        stored = _own_plan_nodes(joins[0].streamedPlan())
+        names = [n.nodeName() for n in stored]
+        assert any(n.startswith("Scan ") for n in names), names
+        assert "Exchange" not in names, names
+
+    by_group = re.compile(
+        r"hashpartitioning\(_hoodie_file_id#\d+, _hoodie_partition_path#\d+, \d+\)"
+    )
+    shuffles = [n for n in kernel if n.nodeName() == "Exchange"]
+    assert len(shuffles) == 1, [n.simpleString(100) for n in shuffles]
+    assert by_group.search(shuffles[0].simpleString(100)), shuffles[0].simpleString(100)
+    assert "Union" in [n.nodeName() for n in _own_plan_nodes(shuffles[0])]
+    assert not [n for n in kernel if n.nodeName() == "BroadcastHashJoin" and any(
+        m.nodeName().startswith("Scan ") for m in _own_plan_nodes(n.streamedPlan())
+    )]
