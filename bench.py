@@ -60,10 +60,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # per-write-stage wall-clock lines (## write[op] stage: Ns) go to
-    # stderr so fixture-build cost is separable from query cost in the
-    # bench log; stdout stays the single JSON line
-    os.environ.setdefault("HUDI_SPARK_DEBUG_TIMING", "1")
 
     import __spark_entry__ as mod
 

@@ -15,9 +15,9 @@ rows.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
+from contextlib import ExitStack, contextmanager
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
@@ -43,7 +43,7 @@ from ..config import (
 from ..callbacks import fire_commit_callback, validate_callback_config
 from ..metrics import table_metrics, validate_metrics_config
 from ..precommit import run_precommit_validators, validate_precommit_config
-from ..concurrency import guarded_commit, start_heartbeat, txn_start_marker
+from ..concurrency import guarded_commit, txn_start_marker
 from ..keygen import stamp_keys
 from ..local_rel import local_df
 from ..metadata import FileSystemView, WriteStat, make_commit_metadata
@@ -64,37 +64,6 @@ _STATS_TYPES = (
     T.FloatType, T.DoubleType, T.DecimalType, T.DateType, T.TimestampType,
     T.BooleanType,
 )
-
-
-class _StageTimer:
-    """Wall-clock per write stage, printed when HUDI_SPARK_DEBUG_TIMING
-    is set — the feedback loop for keeping the write path's Spark-job
-    count and per-job cost honest."""
-
-    # optional programmatic sink for tooling (tools/scale_curve.py):
-    # (op, stage, seconds) appended per mark when set
-    sink: list | None = None
-
-    def __init__(self, op: str):
-        self.enabled = bool(os.environ.get("HUDI_SPARK_DEBUG_TIMING"))
-        self.op = op
-        self.last = time.perf_counter()
-
-    def mark(self, stage: str) -> None:
-        if not self.enabled and _StageTimer.sink is None:
-            return
-        now = time.perf_counter()
-        dt = now - self.last
-        self.last = now
-        if _StageTimer.sink is not None:
-            _StageTimer.sink.append((self.op, stage, dt))
-        if self.enabled:
-            import sys
-
-            print(
-                f"## write[{self.op}] {stage}: {dt:.2f}s",
-                file=sys.stderr, flush=True,
-            )
 
 
 def data_columns(schema: T.StructType) -> list[str]:
@@ -1020,49 +989,106 @@ def _finalize(df: DataFrame, data_cols: list[str]) -> DataFrame:
     return df.selectExpr(*exprs)
 
 
-def _claim_write_instant(table, action, operation, instant_time=None):
-    """Allocate the write's instant and create-once its requested file,
-    retrying on a cross-process millisecond collision (see
-    ``timeline.claim_new_instant``). The heartbeat starts BEFORE the
-    requested file becomes visible so rivals' lazy failed-write sweep
-    never sees a pending instant without one; a losing claim's
-    heartbeat is stopped and nothing else is touched — the colliding
-    requested file belongs to the RIVAL. ``operation`` is a
-    WriteOperation or a plain string (DDL commits)."""
-    from ..timeline import claim_timestamp
+class _WriteInstant:
+    """How a writer's instant is claimed, opened, aborted and committed —
+    the one place for the start/commit sequence the reference keeps in
+    ``AbstractHoodieWriteClient``. Every writer (batch, replace,
+    bootstrap, DDL) runs it:
 
-    op = operation.value if hasattr(operation, "value") else str(operation)
-    last: Exception | None = None
-    for _ in range(5):
-        instant = instant_time or table.new_instant()
-        if instant_time is None and not claim_timestamp(table, instant):
-            # a rival (any action) owns this millisecond — next one
-            last = IOError(f"timestamp {instant} claimed by a rival")
-            continue
-        hb = start_heartbeat(table, instant)
+    - construct at writer entry: the callback, precommit and metrics
+      configs are checked there, so a bad one fails before any claim and
+      never only after the commit is durable (code-review r7);
+    - ``open`` claims the instant (``timeline.claim_instant``, with a
+      heartbeat), moves it to inflight and yields it. If the body raises
+      an ``Exception`` before the commit point, the instant's timeline
+      files, its ``data/<instant>`` dir and its index delta are deleted.
+      Any other ``BaseException`` (a crash, an interrupt) leaves them to
+      the failed-write sweep. The heartbeat stops either way;
+    - ``complete`` is the commit point (``guarded_commit``); ``commit``
+      is the table writers' tail around it."""
+
+    def __init__(self, table):
+        cfg = table.cfg
+        validate_callback_config(cfg)
+        validate_precommit_config(cfg)
+        validate_metrics_config(cfg)
+        self.table = table
+        self.t0 = time.time()
+        self.instant: str | None = None
+        self.action: str | None = None
+        self.committed = False
+
+    @contextmanager
+    def open(self, action: str, operation, instant_time: str | None = None):
+        """``operation`` is a WriteOperation or a plain string (DDL)."""
+        from ..timeline import claim_instant
+
+        table = self.table
+        op = operation.value if hasattr(operation, "value") else str(operation)
+        instant, hb = claim_instant(
+            table, action, {"operation": op}, instant_time, heartbeat=True
+        )
+        self.instant, self.action = instant, action
         try:
-            table.timeline.create_requested(
-                instant, action, {"operation": op}
-            )
-            return instant, hb
-        except BaseException as e:
+            table.timeline.transition_to_inflight(instant, action)
+        except BaseException:
+            # stop the refresh thread (else it keeps the heartbeat file
+            # fresh, making the half-created pending instant
+            # unsweepable) and remove OUR pending files — never
+            # COMPLETED: it cannot exist for our fresh claim, and
+            # touching it would be the timestamp-collision data-loss bug
             if hb is not None:
-                # an IOError/OSError is a create-once rejection: on a
-                # legacy-layout collision the heartbeat path is the
-                # RIVAL's liveness guard (shared path, shared instant),
-                # so keep the file. Any other kind is our own infra
-                # failure on a claim we own — delete, or the refresher's
-                # last write leaves a fresh orphan (code-review r7)
-                hb.stop(delete=not isinstance(e, (IOError, OSError)))
-            if instant_time is not None or not isinstance(e, (IOError, OSError)):
-                if instant_time is None and not isinstance(e, (IOError, OSError)):
-                    # infra failure on a millisecond WE claimed, before
-                    # any instant file existed — release the claim
-                    # directly rather than stranding it for the sweep
-                    table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
+                hb.stop()
+            table.timeline.delete_pending_instant_files(instant, action)
+            if instant_time is None:
+                # the claim is provably OURS (claim_timestamp returned
+                # True) — delete it rather than strand it for the
+                # age-gated sweep. NEVER for a caller-supplied instant:
+                # a claim file there belongs to a RIVAL, and deleting it
+                # would reopen the millisecond to a third writer
+                # (code-review r7)
+                table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
+            raise
+        try:
+            yield instant
+        except Exception as exc:
+            if self.committed:
+                # the instant is durable — a post-commit failure must NOT
+                # erase committed data; surface the error as-is
                 raise
-            last = e
-    raise last
+            from ..concurrency import CommitUndoneError
+            from . import key_index
+
+            table.timeline.delete_instant_files(instant, action)
+            table.fs.delete(table.instant_data_path(instant), recursive=True)
+            # CommitUndoneError means the instant was momentarily
+            # COMPLETED (guarded_commit's post-write undo) — a rival
+            # index compaction could have folded it into a base in that
+            # window, so the folded check must run (advice r6)
+            key_index.drop_instant(
+                table, instant, folded_possible=isinstance(exc, CommitUndoneError)
+            )
+            raise
+        finally:
+            if hb is not None:
+                hb.stop()
+
+    def complete(self, md: dict, txn_start: str | None = None) -> None:
+        """The commit point: through the OCC gate onto the timeline."""
+        guarded_commit(self.table, self.instant, self.action, md, txn_start)
+        self.committed = True
+
+    def commit(self, md: dict, txn_start: str | None) -> None:
+        """Table writers' tail: precommit validators (a raise aborts the
+        instant) → commit point → callback → metrics. Post-commit
+        services run after ``open`` exits."""
+        table = self.table
+        run_precommit_validators(table, self.instant, self.action, md)
+        self.complete(md, txn_start)
+        fire_commit_callback(table, self.instant, self.action, md)
+        table_metrics(table).update_commit_metrics(
+            self.action, time.time() - self.t0, md
+        )
 
 
 def run_batch_write(
@@ -1085,11 +1111,7 @@ def run_batch_write(
     supplies already-located records."""
     cfg = table.cfg
     cfg.validate_virtual_keys()
-    validate_callback_config(cfg)  # fail fast, never post-commit
-    validate_precommit_config(cfg)
-    validate_metrics_config(cfg)
-    _write_t0 = time.time()
-    spark = table.spark
+    w = _WriteInstant(table)
     is_delete = operation == WriteOperation.DELETE
     payload = payload or get_payload(
         "empty" if is_delete else cfg.payload, cfg.precombine_field
@@ -1098,11 +1120,9 @@ def run_batch_write(
 
     global_idx = cfg.index_type.upper().startswith("GLOBAL") or key_index.enabled(cfg)
 
-    timer = _StageTimer(operation.value)
     table.rollback_pending_writes()
     view = table.view()
     table_schema = table.schema()
-    timer.mark("view")
 
     pre_tagged = pre_tagged and FILE_ID_COL in df.columns
     incoming = stamp_keys(df, cfg, partition_optional=is_delete and global_idx)
@@ -1165,31 +1185,11 @@ def run_batch_write(
         else "commit"
     )
     txn_start = txn_start_marker(table, view)
-    instant, hb = _claim_write_instant(table, action, operation, instant_time)
-    try:
-        table.timeline.transition_to_inflight(instant, action)
-    except BaseException:
-        # a failure HERE is outside the main try/finally below: stop the
-        # refresh thread (else it keeps the heartbeat file perpetually
-        # fresh, making any half-created pending instant unsweepable)
-        # and remove OUR pending files (never COMPLETED — it cannot
-        # exist for our fresh claim, and touching it would be the
-        # timestamp-collision data-loss bug all over again)
-        if hb is not None:
-            hb.stop()
-        table.timeline.delete_pending_instant_files(instant, action)
-        if instant_time is None:
-            # the claim is provably OURS here (claim_timestamp returned
-            # True) — delete it directly instead of stranding it for the
-            # age-gated orphan sweep. NEVER when the instant was
-            # caller-supplied: claim_timestamp never ran, so a claim
-            # file at this timestamp belongs to a RIVAL and deleting it
-            # would reopen the millisecond to a third writer
-            # (code-review r7)
-            table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
-        raise
-    committed = False
-    try:
+    with w.open(action, operation, instant_time) as instant, ExitStack() as cached:
+        mor_delta = action == "deltacommit"
+        touched: set[tuple[str, str]] = set()
+        log_fids: set[tuple[str, str]] = set()
+        tomb = None
         if operation == WriteOperation.BULK_INSERT:
             # fast path (row-writer analogue,
             # HoodieDatasetBulkInsertHelper.java:70-133): no index lookup,
@@ -1197,251 +1197,246 @@ def run_batch_write(
             # file groups derived from the output partition id
             out = _bulk_insert_df(table, incoming, data_cols, instant)
             write_instant_files(table, out, instant, 0, pre_partitioned=True)
-            timer.mark("bulk_write")
-            stats = collect_write_stats(table, instant)
-            timer.mark("stats")
-            if key_index.enabled(cfg):
-                key_index.append_from_written(table, instant)
-            md = make_commit_metadata(
-                operation.value, out.schema.json(), stats, extra=extra
-            )
-            run_precommit_validators(table, instant, action, md)
-            guarded_commit(table, instant, action, md, txn_start)
-            committed = True
-            fire_commit_callback(table, instant, action, md)
-            table_metrics(table).update_commit_metrics(
-                action, time.time() - _write_t0, md
-            )
-            table.run_post_commit_services()
-            return instant
+        else:
+            from pyspark import StorageLevel
 
-        from pyspark import StorageLevel
-
-        # ---- index tagging ------------------------------------------------
-        if pre_tagged:
-            tagged = incoming
-        elif operation in (WriteOperation.UPSERT, WriteOperation.DELETE) or (
-            operation == WriteOperation.INSERT and cfg.insert_drop_dups
-        ):
-            # A table with few partitions gains nothing from discovering
-            # the incoming batch's affected partitions (a Spark job + a
-            # cache pass over `incoming` to avoid re-evaluating keygen +
-            # preCombine): index over every partition and let only the
-            # `tagged` cache materialize the pipeline, once. Tables with
-            # many partitions (the 100 TB shape) keep the pruning join.
-            few_parts = len(view.partitions()) <= 64
-            from .bloom import enabled as _bloom_filters_on
-
-            if (
-                not few_parts
-                or key_index.enabled(cfg)
-                or _bloom_filters_on(cfg)
+            # ---- index tagging --------------------------------------------
+            if pre_tagged:
+                tagged = incoming
+            elif operation in (WriteOperation.UPSERT, WriteOperation.DELETE) or (
+                operation == WriteOperation.INSERT and cfg.insert_drop_dups
             ):
-                # the incoming pipeline (keygen + align + preCombine
-                # window) is evaluated more than once downstream: by the
-                # affected-partitions collect (many-partition tables),
-                # by the RECORD_INDEX tag's key semi-join + tag join
-                # (code-review r7), or by the bloom membership stage's
-                # range agg + distinct-keys pair job (review r8) — cache
-                # it so that evaluation isn't repeated
-                incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
-            tagged = tag_location(table, view, incoming, all_partitions=few_parts)
-            if operation == WriteOperation.INSERT and cfg.insert_drop_dups:
-                # INSERT_DROP_DUPS: drop records whose key already exists
-                tagged = tagged.filter(F.col(FILE_ID_COL).isNull())
-        else:
-            tagged = incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
+                # A table with few partitions gains nothing from
+                # discovering the incoming batch's affected partitions (a
+                # Spark job + a cache pass over `incoming` to avoid
+                # re-evaluating keygen + preCombine): index over every
+                # partition and let only the `tagged` cache materialize
+                # the pipeline, once. Tables with many partitions (the
+                # 100 TB shape) keep the pruning join.
+                few_parts = len(view.partitions()) <= 64
+                from .bloom import enabled as _bloom_filters_on
 
-        # the tagged frame feeds ≥3 actions (profile collects + the write);
-        # persist it like the reference persists its input RDD
-        # (BaseSparkCommitActionExecutor.java:150-151)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        updates = tagged.filter(F.col(FILE_ID_COL).isNotNull())
-        inserts = tagged.filter(F.col(FILE_ID_COL).isNull())
-        timer.mark("tag_plan")
+                if (
+                    not few_parts
+                    or key_index.enabled(cfg)
+                    or _bloom_filters_on(cfg)
+                ):
+                    # the incoming pipeline (keygen + align + preCombine
+                    # window) is evaluated more than once downstream: by
+                    # the affected-partitions collect (many-partition
+                    # tables), by the RECORD_INDEX tag's key semi-join +
+                    # tag join (code-review r7), or by the bloom
+                    # membership stage's range agg + distinct-keys pair
+                    # job (review r8) — cache it so that evaluation isn't
+                    # repeated
+                    incoming = incoming.persist(StorageLevel.MEMORY_AND_DISK)
+                    cached.callback(incoming.unpersist)
+                tagged = tag_location(table, view, incoming, all_partitions=few_parts)
+                if operation == WriteOperation.INSERT and cfg.insert_drop_dups:
+                    # INSERT_DROP_DUPS: drop records whose key already exists
+                    tagged = tagged.filter(F.col(FILE_ID_COL).isNull())
+            else:
+                tagged = incoming.withColumn(FILE_ID_COL, F.lit(None).cast("string"))
 
-        # ---- workload profile (ONE job, like buildProfile:
-        # BaseSparkCommitActionExecutor.java:182-214): per-(partition,
-        # file_id) counts give the insert bucket sizes, the touched
-        # update groups, and the MOR log fids without extra collects.
-        # Driver memory bound: one tiny row per TOUCHED (partition,
-        # file_id) — the same shape as the reference's countByKey. Worst
-        # case (a batch touching every group of a 100 TB / ~875k-group
-        # table) is ~tens of MB; batches are normally far narrower, and
-        # a full-table rewrite belongs to bulk_insert/insert_overwrite
-        # which skip tagging entirely.
-        marker = (
-            F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-            if DELETE_MARKER_COL in tagged.columns
-            else F.lit(False)
-        )
-        profile = (
-            tagged.groupBy(PARTITION_PATH_COL, FILE_ID_COL)
-            # max(marker) rides the same shuffle for free: per-group
-            # tombstone presence, recorded on MOR log stats below so
-            # readers can skip the delete-block merge pass when no log
-            # of a slice carries a delete (optimization r8)
-            .agg(F.count(F.lit(1)).alias("count"), F.max(marker).alias("__tomb"))
-            .collect()
-        )
-        timer.mark("profile")
-        insert_counts = [(r[0], r[2]) for r in profile if r[1] is None]
-        update_groups = {(r[0], r[1]) for r in profile if r[1] is not None}
-        group_tombstones = {
-            (r[0], r[1]): bool(r[3]) for r in profile if r[1] is not None
-        }
+            # the tagged frame feeds ≥3 actions (profile collects + the
+            # write); persist it like the reference persists its input RDD
+            # (BaseSparkCommitActionExecutor.java:150-151)
+            tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
+            cached.callback(tagged.unpersist)
+            updates = tagged.filter(F.col(FILE_ID_COL).isNotNull())
+            inserts = tagged.filter(F.col(FILE_ID_COL).isNull())
 
-        # Updates aimed at file groups frozen in a pending clustering
-        # plan (``BaseSparkCommitActionExecutor.clusteringHandleUpdate``,
-        # :117-143): REJECT raises (SparkRejectUpdateStrategy — the
-        # executed clustering would silently drop the update otherwise);
-        # ALLOW_ROLLBACK instead rolls back exactly the pending
-        # clustering plans that name a conflicting group, then proceeds
-        # (SparkAllowUpdateStrategy + isRollbackPendingClustering).
-        if update_groups:
-            from .clustering import pending_clustering_plans
-
-            plans = pending_clustering_plans(table)
-            conflict_instants = {
-                ts for ts, groups in plans.items() if groups & update_groups
-            }
-            if conflict_instants:
-                strategy = cfg.clustering_updates_strategy.upper()
-                if strategy in ("ALLOW_ROLLBACK", "ALLOW", "ROLLBACK"):
-                    from .services import rollback_instant
-
-                    for ts in sorted(conflict_instants):
-                        rollback_instant(table, ts)
-                else:
-                    conflict = set().union(
-                        *(plans[ts] for ts in conflict_instants)
-                    ) & update_groups
-                    raise ValueError(
-                        "update rejected: file groups are under pending clustering: "
-                        + ", ".join(f"{pp}/{fid}" for pp, fid in sorted(conflict)[:5])
-                    )
-        if is_delete:
-            inserts = inserts.limit(0)  # deleting absent keys is a no-op
-            insert_counts = []
-
-        mor_delta = action == "deltacommit"
-        pack = operation in (WriteOperation.UPSERT, WriteOperation.INSERT) and not mor_delta
-        assigned_inserts, packed_fids = assign_inserts(
-            table, view, inserts, pack, insert_counts=insert_counts
-        )
-        timer.mark("assign")
-
-        log_fids: set[tuple[str, str]] = set()
-        if mor_delta:
-            # MOR: updates/deletes become delta ("log") rows; inserts open
-            # new base file groups in the same deltacommit.
-            log_rows = _stamp_meta(updates, instant)
-            base_rows = _stamp_meta(assigned_inserts, instant)
-            out = _finalize(log_rows, data_cols).unionByName(
-                _finalize(base_rows, data_cols)
+            # ---- workload profile (ONE job, like buildProfile:
+            # BaseSparkCommitActionExecutor.java:182-214): per-(partition,
+            # file_id) counts give the insert bucket sizes, the touched
+            # update groups, and the MOR log fids without extra collects.
+            # Driver memory bound: one tiny row per TOUCHED (partition,
+            # file_id) — the same shape as the reference's countByKey.
+            # Worst case (a batch touching every group of a 100 TB /
+            # ~875k-group table) is ~tens of MB; batches are normally far
+            # narrower, and a full-table rewrite belongs to
+            # bulk_insert/insert_overwrite which skip tagging entirely.
+            marker = (
+                F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+                if DELETE_MARKER_COL in tagged.columns
+                else F.lit(False)
             )
-            log_fids = set(update_groups)
-            n_groups = len({fid for _, fid in log_fids}) + 8
-            write_instant_files(table, out, instant, n_groups)
-        else:
-            # COW: rewrite every affected file group (updates + packed
-            # inserts), reconciled by the strategy _choose_reconcile
-            # picks; fresh groups come along in the same pass.
-            slices = view.latest_file_slices()
-            touched = set(update_groups) | {
-                (s.partition, s.file_id)
-                for s in slices
-                if (s.partition, s.file_id) in packed_fids
-            }
-            old_slices = [s for s in slices if (s.partition, s.file_id) in touched]
-            n_upd = sum(r[2] for r in profile if r[1] is not None)
-            reconcile = _choose_reconcile(
-                operation,
-                old_slices,
-                n_upd * _est_merge_row_bytes(data_cols, col_types),
-                cfg.upsert_broadcast_budget_bytes,
+            profile = (
+                tagged.groupBy(PARTITION_PATH_COL, FILE_ID_COL)
+                # max(marker) rides the same shuffle for free: per-group
+                # tombstone presence, recorded on MOR log stats below so
+                # readers can skip the delete-block merge pass when no
+                # log of a slice carries a delete (optimization r8)
+                .agg(F.count(F.lit(1)).alias("count"), F.max(marker).alias("__tomb"))
+                .collect()
             )
-            n_parts = max(len(touched), 1) + 8
-            if reconcile != "fresh":
-                from ..sources.read import _merge_slices, slices_to_df
+            insert_counts = [(r[0], r[2]) for r in profile if r[1] is None]
+            update_groups = {(r[0], r[1]) for r in profile if r[1] is not None}
+            group_tombstones = {
+                (r[0], r[1]): bool(r[3]) for r in profile if r[1] is not None
+            }
 
-                if any(s.logs for s in old_slices):
-                    # a MOR table routed through the COW rewrite path
-                    # (MERGE INTO / requires_stored_merge payloads): the
-                    # stored side must be the MERGED view of the touched
-                    # slices — reading base files alone would silently
-                    # drop uncompacted deltacommit updates/deletes when
-                    # the new base supersedes the slice (the logs detach)
-                    old = _merge_slices(table, old_slices).filter(
-                        ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-                    )
-                else:
-                    old = slices_to_df(table, old_slices)
-            if reconcile in ("broadcast", "kernel") and not needs_combine:
-                # the reference's HoodieMergeHandle collapses duplicate
-                # update keys via its keyToNewRecords hash map even with
-                # preCombine disabled — mirror that so the merge groups
-                # hold ≤1 incoming row. Inserts keep duplicates
-                # (create-handle path writes every row).
-                updates = precombine_dedup(updates, payload, global_idx)
+            # Updates aimed at file groups frozen in a pending clustering
+            # plan (``BaseSparkCommitActionExecutor.clusteringHandleUpdate``,
+            # :117-143): REJECT raises (SparkRejectUpdateStrategy — the
+            # executed clustering would silently drop the update
+            # otherwise); ALLOW_ROLLBACK instead rolls back exactly the
+            # pending clustering plans that name a conflicting group, then
+            # proceeds (SparkAllowUpdateStrategy +
+            # isRollbackPendingClustering).
+            if update_groups:
+                from .clustering import pending_clustering_plans
 
-            if reconcile == "fresh":
-                # no stored side: the payload must still veto pure
-                # inserts — e.g. MERGE INTO with no WHEN NOT MATCHED
-                # drops unmatched source rows.
-                merged = _append_frame(
-                    assigned_inserts if operation == WriteOperation.INSERT
-                    else updates.unionByName(assigned_inserts, allowMissingColumns=True),
-                    payload, data_cols, col_types, instant, packed_fids,
+                plans = pending_clustering_plans(table)
+                conflict_instants = {
+                    ts for ts, groups in plans.items() if groups & update_groups
+                }
+                if conflict_instants:
+                    strategy = cfg.clustering_updates_strategy.upper()
+                    if strategy in ("ALLOW_ROLLBACK", "ALLOW", "ROLLBACK"):
+                        from .services import rollback_instant
+
+                        for ts in sorted(conflict_instants):
+                            rollback_instant(table, ts)
+                    else:
+                        conflict = set().union(
+                            *(plans[ts] for ts in conflict_instants)
+                        ) & update_groups
+                        raise ValueError(
+                            "update rejected: file groups are under pending clustering: "
+                            + ", ".join(f"{pp}/{fid}" for pp, fid in sorted(conflict)[:5])
+                        )
+            if is_delete:
+                inserts = inserts.limit(0)  # deleting absent keys is a no-op
+                insert_counts = []
+
+            pack = operation in (WriteOperation.UPSERT, WriteOperation.INSERT) and not mor_delta
+            assigned_inserts, packed_fids = assign_inserts(
+                table, view, inserts, pack, insert_counts=insert_counts
+            )
+
+            if mor_delta:
+                # MOR: updates/deletes become delta ("log") rows; inserts
+                # open new base file groups in the same deltacommit.
+                log_rows = _stamp_meta(updates, instant)
+                base_rows = _stamp_meta(assigned_inserts, instant)
+                out = _finalize(log_rows, data_cols).unionByName(
+                    _finalize(base_rows, data_cols)
                 )
-            elif reconcile == "append":
-                # insert never consults the index: duplicates of existing
-                # keys are APPENDED, not merged (reference create-handle
-                # writes every row). Stored rows of the touched groups
-                # stream through from the scan byte-identical (original
-                # commit time / seqno) — no union + repartition + window
-                # over the stored side at all (guide §2.4).
-                merged = _project_write_shape(old, data_cols, col_types).unionByName(
-                    _append_frame(
-                        assigned_inserts, payload, data_cols, col_types,
-                        instant, packed_fids,
-                    )
+                log_fids = set(update_groups)
+                n_groups = len({fid for _, fid in log_fids}) + 8
+                write_instant_files(table, out, instant, n_groups)
+            else:
+                # COW: rewrite every affected file group (updates + packed
+                # inserts), reconciled by the strategy _choose_reconcile
+                # picks; fresh groups come along in the same pass.
+                slices = view.latest_file_slices()
+                touched = set(update_groups) | {
+                    (s.partition, s.file_id)
+                    for s in slices
+                    if (s.partition, s.file_id) in packed_fids
+                }
+                old_slices = [s for s in slices if (s.partition, s.file_id) in touched]
+                n_upd = sum(r[2] for r in profile if r[1] is not None)
+                reconcile = _choose_reconcile(
+                    operation,
+                    old_slices,
+                    n_upd * _est_merge_row_bytes(data_cols, col_types),
+                    cfg.upsert_broadcast_budget_bytes,
                 )
-            elif reconcile == "broadcast":
-                # stored LEFT JOIN broadcast(incoming winners): the stored
-                # side streams from the base-file scan with ZERO shuffle
-                # (see broadcast_merge_stored for the equivalence
-                # contract). Index tagging against live base files makes
-                # every update key provably present in `old` and inserts
-                # provably absent — updates reconcile in the join and
-                # inserts append without one.
-                jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
-                by_arrival = [F.col(ARRIVAL_ORDER_COL).desc_nulls_last()]
-                # one winner per (group, key) — the kernel's max_by(__ord)
-                # map-put-last pick (also collapses the identical copies
-                # a duplicate-stored-key tag join multiplies out); with
-                # preCombine disabled, duplicate insert keys headed to the
-                # same group collapse the same way (kernel parity)
-                merged = broadcast_merge_stored(
-                    old, first_per_key(updates, jk, by_arrival),
-                    data_cols, col_types, payload, instant,
-                ).unionByName(
-                    _append_frame(
-                        assigned_inserts if needs_combine
-                        else first_per_key(assigned_inserts, jk, by_arrival),
+                n_parts = max(len(touched), 1) + 8
+                if reconcile != "fresh":
+                    from ..sources.read import _merge_slices, slices_to_df
+
+                    if any(s.logs for s in old_slices):
+                        # a MOR table routed through the COW rewrite path
+                        # (MERGE INTO / requires_stored_merge payloads):
+                        # the stored side must be the MERGED view of the
+                        # touched slices — reading base files alone would
+                        # silently drop uncompacted deltacommit
+                        # updates/deletes when the new base supersedes the
+                        # slice (the logs detach)
+                        old = _merge_slices(table, old_slices).filter(
+                            ~F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+                        )
+                    else:
+                        old = slices_to_df(table, old_slices)
+                if reconcile in ("broadcast", "kernel") and not needs_combine:
+                    # the reference's HoodieMergeHandle collapses duplicate
+                    # update keys via its keyToNewRecords hash map even
+                    # with preCombine disabled — mirror that so the merge
+                    # groups hold ≤1 incoming row. Inserts keep duplicates
+                    # (create-handle path writes every row).
+                    updates = precombine_dedup(updates, payload, global_idx)
+
+                if reconcile == "fresh":
+                    # no stored side: the payload must still veto pure
+                    # inserts — e.g. MERGE INTO with no WHEN NOT MATCHED
+                    # drops unmatched source rows.
+                    merged = _append_frame(
+                        assigned_inserts if operation == WriteOperation.INSERT
+                        else updates.unionByName(assigned_inserts, allowMissingColumns=True),
                         payload, data_cols, col_types, instant, packed_fids,
                     )
-                )
-            else:
-                merged = merge_stored_and_incoming(
-                    old, updates.unionByName(assigned_inserts, allowMissingColumns=True),
-                    data_cols, col_types, payload, instant, num_partitions=n_parts,
-                )
-            out = _finalize(merged, data_cols)
-            timer.mark("merge_plan")
-            write_instant_files(table, out, instant, n_parts, pre_partitioned=True)
+                elif reconcile == "append":
+                    # insert never consults the index: duplicates of
+                    # existing keys are APPENDED, not merged (reference
+                    # create-handle writes every row). Stored rows of the
+                    # touched groups stream through from the scan
+                    # byte-identical (original commit time / seqno) — no
+                    # union + repartition + window over the stored side at
+                    # all (guide §2.4).
+                    merged = _project_write_shape(old, data_cols, col_types).unionByName(
+                        _append_frame(
+                            assigned_inserts, payload, data_cols, col_types,
+                            instant, packed_fids,
+                        )
+                    )
+                elif reconcile == "broadcast":
+                    # stored LEFT JOIN broadcast(incoming winners): the
+                    # stored side streams from the base-file scan with ZERO
+                    # shuffle (see broadcast_merge_stored for the
+                    # equivalence contract). Index tagging against live
+                    # base files makes every update key provably present
+                    # in `old` and inserts provably absent — updates
+                    # reconcile in the join and inserts append without
+                    # one.
+                    jk = [FILE_ID_COL, PARTITION_PATH_COL, RECORD_KEY_COL]
+                    by_arrival = [F.col(ARRIVAL_ORDER_COL).desc_nulls_last()]
+                    # one winner per (group, key) — the kernel's
+                    # max_by(__ord) map-put-last pick (also collapses the
+                    # identical copies a duplicate-stored-key tag join
+                    # multiplies out); with preCombine disabled, duplicate
+                    # insert keys headed to the same group collapse the
+                    # same way (kernel parity)
+                    merged = broadcast_merge_stored(
+                        old, first_per_key(updates, jk, by_arrival),
+                        data_cols, col_types, payload, instant,
+                    ).unionByName(
+                        _append_frame(
+                            assigned_inserts if needs_combine
+                            else first_per_key(assigned_inserts, jk, by_arrival),
+                            payload, data_cols, col_types, instant, packed_fids,
+                        )
+                    )
+                else:
+                    merged = merge_stored_and_incoming(
+                        old, updates.unionByName(assigned_inserts, allowMissingColumns=True),
+                        data_cols, col_types, payload, instant, num_partitions=n_parts,
+                    )
+                out = _finalize(merged, data_cols)
+                write_instant_files(table, out, instant, n_parts, pre_partitioned=True)
+                if key_index.enabled(cfg) and DELETE_MARKER_COL in tagged.columns:
+                    # COW rewrites OMIT deleted rows, so the written files
+                    # carry no trace of a delete — emit index tombstones
+                    # from the tagged delete rows (MOR deltacommits write
+                    # marker rows that append_from_written picks up by
+                    # itself)
+                    tomb = tagged.filter(
+                        F.col(FILE_ID_COL).isNotNull()
+                        & F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
+                    ).select(RECORD_KEY_COL, PARTITION_PATH_COL, FILE_ID_COL)
 
-        timer.mark("write")
         stats = collect_write_stats(table, instant, log_fids)
         if mor_delta:
             # stamp tombstone presence on the log stats from the profile
@@ -1453,78 +1448,21 @@ def run_batch_write(
                     st.tombstones = group_tombstones.get(
                         (st.partition, st.file_id)
                     )
-        timer.mark("stats")
         if key_index.enabled(cfg):
-            # COW rewrites OMIT deleted rows, so the written files carry
-            # no trace of a delete — emit index tombstones from the
-            # tagged delete rows (MOR deltacommits write marker rows that
-            # append_from_written picks up by itself)
-            tomb = None
-            if not mor_delta and DELETE_MARKER_COL in tagged.columns:
-                tomb = tagged.filter(
-                    F.col(FILE_ID_COL).isNotNull()
-                    & F.coalesce(F.col(DELETE_MARKER_COL), F.lit(False))
-                ).select(RECORD_KEY_COL, PARTITION_PATH_COL, FILE_ID_COL)
-            if table.fs.exists(table.instant_data_path(instant)):
-                key_index.append_from_written(table, instant, tombstones=tomb)
-            elif tomb is not None:
-                # every affected group came out empty: no data files were
-                # written, but the deletes must still tombstone the index
-                key_index.append_delta(
-                    table,
-                    instant,
-                    tomb.withColumn(key_index.DELETED_COL, F.lit(True)),
+            key_index.append_from_written(table, instant, tombstones=tomb)
+        # a rewritten file group can come out EMPTY (every record
+        # deleted): Spark's sink writes no file, but the commit must
+        # still supersede the old slice — record a zero-row version
+        # (reference analogue: HoodieMergeHandle always produces a
+        # file, even with 0 records)
+        seen = {(s.partition, s.file_id) for s in stats}
+        for pp, fid in sorted(touched):
+            if (pp, fid) not in seen:
+                stats.append(
+                    WriteStat(partition=pp, file_id=fid, paths=[], rows=0, bytes=0)
                 )
-        if not mor_delta:
-            # a rewritten file group can come out EMPTY (every record
-            # deleted): Spark's sink writes no file, but the commit must
-            # still supersede the old slice — record a zero-row version
-            # (reference analogue: HoodieMergeHandle always produces a
-            # file, even with 0 records)
-            seen = {(s.partition, s.file_id) for s in stats}
-            for pp, fid in sorted(touched):
-                if (pp, fid) not in seen:
-                    stats.append(
-                        WriteStat(partition=pp, file_id=fid, paths=[], rows=0, bytes=0)
-                    )
-        md = make_commit_metadata(
-            operation.value,
-            out.schema.json(),
-            stats,
-            extra=extra,
-        )
-        run_precommit_validators(table, instant, action, md)
-        guarded_commit(table, instant, action, md, txn_start)
-        committed = True
-        fire_commit_callback(table, instant, action, md)
-        table_metrics(table).update_commit_metrics(
-            action, time.time() - _write_t0, md
-        )
-    except Exception as exc:
-        if committed:
-            # the instant is durable — a post-commit service failure must
-            # NOT erase committed data; surface the error as-is
-            raise
-        table.timeline.delete_instant_files(instant, action)
-        table.fs.delete(table.instant_data_path(instant), recursive=True)
-        # CommitUndoneError means the instant was momentarily COMPLETED
-        # (guarded_commit's post-write undo) — a rival index compaction
-        # could have folded it into a base in that window, so the folded
-        # check must run (advice r6)
-        from ..concurrency import CommitUndoneError as _Undone
-
-        key_index.drop_instant(
-            table, instant, folded_possible=isinstance(exc, _Undone)
-        )
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
-        try:
-            incoming.unpersist()  # no-op when never persisted
-            tagged.unpersist()
-        except NameError:
-            pass
+        md = make_commit_metadata(operation.value, out.schema.json(), stats, extra=extra)
+        w.commit(md, txn_start)
     table.run_post_commit_services()
     return instant
 
@@ -1547,8 +1485,7 @@ def bootstrap_metadata_only(table, parquet_path: str) -> str:
     reads — no row is touched, so adopting a 100 TB dataset costs
     minutes, not a rewrite."""
     cfg = table.cfg
-    validate_callback_config(cfg)  # fail fast, never post-commit
-    validate_metrics_config(cfg)
+    w = _WriteInstant(table)
     if table.schema() is not None:
         raise ValueError("bootstrap requires a table with no commits")
     src = parquet_path.rstrip("/")
@@ -1627,21 +1564,7 @@ def bootstrap_metadata_only(table, parquet_path: str) -> str:
         T.StringType,
     )
 
-    # heartbeat-guard the pending window like every other write (a
-    # rival's lazy sweep must never judge this pending commit crashed);
-    # collision-retrying claim, never touching a rival's files
-    instant, hb = _claim_write_instant(
-        table, "commit", WriteOperation.BOOTSTRAP
-    )
-    try:
-        table.timeline.transition_to_inflight(instant, "commit")
-    except BaseException:
-        if hb is not None:
-            hb.stop()
-        table.timeline.delete_pending_instant_files(instant, "commit")
-        table.fs.delete(f"{table.timeline.dir}/{instant}.claim")  # ours
-        raise
-    try:
+    with w.open("commit", WriteOperation.BOOTSTRAP):
         stats = []
         for uri, size in sorted(listed):
             fstats = per_file[uri]
@@ -1669,16 +1592,10 @@ def bootstrap_metadata_only(table, parquet_path: str) -> str:
             stats,
             extra={"bootstrap_from": parquet_path, "mode": "METADATA_ONLY"},
         )
-        guarded_commit(table, instant, "commit", md)
-    except Exception:
-        table.timeline.delete_instant_files(instant, "commit")
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
+        w.complete(md)
     # post-durability: a callback failure can't undo the bootstrap
-    fire_commit_callback(table, instant, "commit", md)
-    return instant
+    fire_commit_callback(table, w.instant, "commit", md)
+    return w.instant
 
 
 def run_replace_write(
@@ -1694,24 +1611,12 @@ def run_replace_write(
     (``SparkInsertOverwriteCommitActionExecutor``,
     ``SparkDeletePartitionCommitActionExecutor``)."""
     cfg = table.cfg
-    validate_callback_config(cfg)  # fail fast, never post-commit
-    validate_precommit_config(cfg)
-    validate_metrics_config(cfg)
-    _write_t0 = time.time()
+    w = _WriteInstant(table)
     table.rollback_pending_writes()
     view = table.view()
     table_schema = table.schema()
     txn_start = txn_start_marker(table, view)
-    instant, hb = _claim_write_instant(table, "replacecommit", operation)
-    try:
-        table.timeline.transition_to_inflight(instant, "replacecommit")
-    except BaseException:
-        if hb is not None:
-            hb.stop()  # else the refresh thread outlives the failed write
-        table.timeline.delete_pending_instant_files(instant, "replacecommit")
-        table.fs.delete(f"{table.timeline.dir}/{instant}.claim")  # ours
-        raise
-    try:
+    with w.open("replacecommit", operation) as instant:
         stats: list[WriteStat] = []
         incoming = None
         if df is not None:
@@ -1743,36 +1648,16 @@ def run_replace_write(
             out = _finalize(_stamp_meta(assigned, instant), data_cols)
             write_instant_files(table, out, instant, 8)
             stats = collect_write_stats(table, instant)
-            from . import key_index as _ki
+            from . import key_index
 
-            if _ki.enabled(cfg) and table.fs.exists(table.instant_data_path(instant)):
-                _ki.append_from_written(table, instant)
+            if key_index.enabled(cfg):
+                key_index.append_from_written(table, instant)
             schema_json = out.schema.json()
         else:
             schema_json = view.latest_schema() or ""
         md = make_commit_metadata(
             operation.value, schema_json, stats, replaced=replaced, extra=extra
         )
-        run_precommit_validators(table, instant, "replacecommit", md)
-        guarded_commit(table, instant, "replacecommit", md, txn_start)
-    except Exception as exc:
-        table.timeline.delete_instant_files(instant, "replacecommit")
-        table.fs.delete(table.instant_data_path(instant), recursive=True)
-        from ..concurrency import CommitUndoneError as _Undone
-        from . import key_index as _ki
-
-        # folded only possible if the instant was momentarily COMPLETED
-        # (guarded_commit post-write undo — advice r6)
-        _ki.drop_instant(table, instant, folded_possible=isinstance(exc, _Undone))
-        raise
-    finally:
-        if hb is not None:
-            hb.stop()
-    # post-durability (outside the try: the except above deletes instant
-    # files, which must never run for a committed instant)
-    fire_commit_callback(table, instant, "replacecommit", md)
-    table_metrics(table).update_commit_metrics(
-        "replacecommit", time.time() - _write_t0, md
-    )
+        w.commit(md, txn_start)
     table.run_post_commit_services()
     return instant

@@ -104,25 +104,63 @@ def claim_timestamp(table, instant: str) -> bool:
 
 
 def claim_new_instant(table, action: str, metadata: dict | None = None) -> str:
-    """Allocate a FRESH instant and create-once its requested file,
-    retrying when a rival process claimed the same millisecond.
+    """Allocate a FRESH instant and create-once its requested file — the
+    table services' claim (no heartbeat); see ``claim_instant``."""
+    return claim_instant(table, action, metadata)[0]
+
+
+def claim_instant(
+    table,
+    action: str,
+    metadata: dict | None,
+    instant_time: str | None = None,
+    heartbeat: bool = False,
+):
+    """THE claim loop for every instant: allocate it and create-once its
+    requested file, retrying when a rival process claimed the same
+    millisecond. Returns ``(instant, heartbeat-or-None)``.
 
     Before r7 a millisecond tie escaped as a write failure AND the
     generic cleanup deleted the instant's files — which belonged to the
     RIVAL (up to and including a completed commit: committed-data loss
-    on a timestamp tie, found via the 3-writer soak). The claim loop
-    never touches the rival's files: the loser takes the next
-    millisecond."""
+    on a timestamp tie, found via the 3-writer soak). The loop never
+    touches the rival's files: the loser takes the next millisecond.
+
+    ``heartbeat=True`` (writers) starts the heartbeat BEFORE the
+    requested file becomes visible, so rivals' lazy failed-write sweep
+    never sees a pending instant without one. A caller-supplied
+    ``instant_time`` is taken as-is: no claim file, no retry."""
+    from .concurrency import start_heartbeat
+
     last: Exception | None = None
     for _ in range(5):
-        instant = table.new_instant()
-        if not claim_timestamp(table, instant):
+        instant = instant_time or table.new_instant()
+        if instant_time is None and not claim_timestamp(table, instant):
+            # a rival (any action) owns this millisecond — next one
             last = IOError(f"timestamp {instant} claimed by a rival")
             continue
+        hb = start_heartbeat(table, instant) if heartbeat else None
         try:
             table.timeline.create_requested(instant, action, metadata)
-            return instant
-        except (IOError, OSError) as e:  # legacy layout without claims
+            return instant, hb
+        except BaseException as e:
+            # an OSError is a create-once rejection (legacy layout
+            # without claims): the requested file and, on a shared
+            # heartbeat path, the heartbeat are the RIVAL's — keep both.
+            # Any other kind is our own infra failure on a claim we own
+            # — delete the heartbeat, or the refresher's last write
+            # leaves a fresh orphan (code-review r7)
+            collision = isinstance(e, OSError)
+            if hb is not None:
+                hb.stop(delete=not collision)
+            if instant_time is not None:
+                raise
+            if not collision:
+                # no instant file exists yet on a millisecond WE claimed
+                # — release the claim rather than stranding it for the
+                # age-gated sweep
+                table.fs.delete(f"{table.timeline.dir}/{instant}.claim")
+                raise
             last = e
     raise last  # five straight collisions = a real storage failure
 

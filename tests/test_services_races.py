@@ -9,6 +9,8 @@
 4. guarded_commit's post-write undo raises CommitUndoneError and the
    write abort path passes folded_possible=True to drop_instant
    (advice r6 #4).
+5. Every writer (``WRITERS``) shares one instant lifecycle: the config
+   checks, the abort contract and the claim hygiene hold for each.
 
 Reference analogue: ``TestHoodieClientMultiWriter.java`` rival-service
 interleavings.
@@ -51,6 +53,51 @@ def _mor_cfg(**kw):
     )
     base.update(kw)
     return WriteConfig(**base)
+
+
+# every writer that runs the one instant lifecycle (write._WriteInstant)
+WRITERS = [
+    "bulk_insert", "upsert", "insert_overwrite", "delete_partition",
+    "bootstrap", "add_columns",
+]
+
+
+def _writer(spark, root, writer, **kw):
+    """A table under ``root`` ready for ``writer``, and a call that runs
+    the writer once: the table holds SEED, or (bootstrap) is empty and
+    SEED is its parquet source."""
+    t = HudiTable.create(
+        spark,
+        f"{root}/t",
+        WriteConfig(
+            record_key_field="id",
+            partition_field="part",
+            precombine_field="v",
+            auto_clean=False,
+            auto_archive=False,
+            **kw,
+        ),
+    )
+    if writer == "bootstrap":
+        _df(spark, SEED).write.partitionBy("part").parquet(f"{root}/src")
+        return t, lambda: t.bootstrap(f"{root}/src", mode="METADATA_ONLY")
+    t.bulk_insert(_df(spark, SEED))
+    return t, {
+        "bulk_insert": lambda: t.bulk_insert(_df(spark, UPD)),
+        "upsert": lambda: t.upsert(_df(spark, UPD)),
+        "insert_overwrite": lambda: t.insert_overwrite(_df(spark, UPD)),
+        "delete_partition": lambda: t.delete_partition(["p0"]),
+        "add_columns": lambda: t.add_columns([("x", "string")]),
+    }[writer]
+
+
+def _table_state(t):
+    """Completed timeline plus the snapshot's columns and rows."""
+    done = t.timeline.completed()
+    if not t.timeline.completed_write_instants():
+        return done, None
+    snap = t.snapshot()
+    return done, snap.columns, sorted(map(tuple, snap.collect()))
 
 
 def test_compaction_abort_preserves_rival_completed_commit(spark, tmp_table_path):
@@ -173,21 +220,17 @@ def test_clean_replay_respects_new_savepoint(spark, tmp_table_path):
     assert post_c1 == pre_c1, "savepointed files were deleted by the replayed plan"
 
 
-def test_commit_undone_error_wires_folded_possible(spark, tmp_table_path):
-    """The write abort path must call drop_instant(folded_possible=True)
-    iff the failure was guarded_commit's post-write undo — the instant
-    was momentarily COMPLETED then (advice r6 #4)."""
-    cfg = WriteConfig(
-        record_key_field="id",
-        partition_field="part",
-        precombine_field="v",
-        index_type="RECORD_INDEX",
-        key_index_buckets=2,
-        auto_clean=False,
-        auto_archive=False,
+@pytest.mark.parametrize("writer", WRITERS)
+def test_commit_undone_error_wires_folded_possible(spark, tmp_table_path, writer):
+    """Every writer's abort path must call drop_instant(folded_possible=
+    True) iff the failure was guarded_commit's post-write undo — the
+    instant was momentarily COMPLETED then (advice r6 #4) — and must
+    leave no pending instant, no data dir and an unchanged snapshot."""
+    t, run = _writer(
+        spark, tmp_table_path, writer,
+        index_type="RECORD_INDEX", key_index_buckets=2,
     )
-    t = HudiTable.create(spark, tmp_table_path, cfg)
-    t.bulk_insert(_df(spark, SEED))
+    before = _table_state(t)
 
     seen = {}
     orig_drop = key_index_mod.drop_instant
@@ -199,27 +242,56 @@ def test_commit_undone_error_wires_folded_possible(spark, tmp_table_path):
     orig_commit = write_mod.guarded_commit
 
     def undone(table, instant, action, metadata, txn_start=None):
+        seen["instant"] = instant
         raise CommitUndoneError("simulated post-write undo")
 
     def plain_fail(table, instant, action, metadata, txn_start=None):
+        seen["instant"] = instant
         raise RuntimeError("simulated plain commit failure")
 
     key_index_mod.drop_instant = spy_drop
-    write_mod.guarded_commit = undone
     try:
-        with pytest.raises(CommitUndoneError):
-            t.upsert(_df(spark, UPD))
-        assert seen.get("folded_possible") is True
-        seen.clear()
-        write_mod.guarded_commit = plain_fail
-        with pytest.raises(RuntimeError):
-            t.upsert(_df(spark, UPD))
-        assert seen.get("folded_possible") is False
+        for fail, exc, folded in (
+            (undone, CommitUndoneError, True),
+            (plain_fail, RuntimeError, False),
+        ):
+            seen.clear()
+            write_mod.guarded_commit = fail
+            with pytest.raises(exc):
+                run()
+            assert seen.get("folded_possible") is folded
+            assert t.timeline.pending() == []
+            assert not t.fs.exists(t.instant_data_path(seen["instant"]))
     finally:
         key_index_mod.drop_instant = orig_drop
         write_mod.guarded_commit = orig_commit
-    # table still healthy after both aborts
-    assert t.snapshot().count() == len(SEED)
+    # table unchanged and still healthy after both aborts
+    assert _table_state(t) == before
+    assert _claims(t) == []
+
+
+@pytest.mark.parametrize("writer", [w for w in WRITERS if w != "add_columns"])
+def test_post_commit_failure_keeps_the_commit(spark, tmp_table_path, writer):
+    """A failure after the commit point (here the commit callback) must
+    surface without undoing the instant: the abort runs only before
+    ``guarded_commit`` returns. (DDL commits fire no callback.)"""
+    t, run = _writer(spark, tmp_table_path, writer)
+    before = t.timeline.completed_write_instants()
+    orig = write_mod.fire_commit_callback
+
+    def boom(table, instant, action, metadata):
+        raise RuntimeError("callback exploded")
+
+    write_mod.fire_commit_callback = boom
+    try:
+        with pytest.raises(RuntimeError, match="callback"):
+            run()
+    finally:
+        write_mod.fire_commit_callback = orig
+    after = t.timeline.completed_write_instants()
+    assert len(after) == len(before) + 1, "post-commit failure undid the commit"
+    assert t.timeline.pending() == []
+    assert t.snapshot().count() > 0
 
 
 def test_compaction_abort_backs_off_from_rival_pending_commit(
@@ -519,9 +591,20 @@ def test_claim_storage_failure_propagates_not_misreported(spark, tmp_table_path)
         t.fs.create_exclusive = orig
     assert calls["n"] == 1, "storage failure must fail fast, not retry as a collision"
 
-    # early-abort claim hygiene (code-review r7): a write that fails at
-    # transition_to_inflight deletes its own claim directly instead of
-    # stranding it for the age-gated orphan sweep
+
+@pytest.mark.parametrize("writer", WRITERS)
+def test_inflight_failure_releases_claim_and_heartbeat(
+    spark, tmp_table_path, writer
+):
+    """Early-abort claim hygiene (code-review r7): a write that fails at
+    transition_to_inflight deletes its own claim directly instead of
+    stranding it for the age-gated orphan sweep, stops its heartbeat
+    and leaves no pending instant. OCC mode, so the heartbeat exists."""
+    t, run = _writer(
+        spark, tmp_table_path, writer,
+        concurrency_mode="OPTIMISTIC_CONCURRENCY_CONTROL",
+        lock_wait_seconds=30.0,
+    )
     orig_inflight = t.timeline.transition_to_inflight
 
     def explode(ts, action):
@@ -530,21 +613,49 @@ def test_claim_storage_failure_propagates_not_misreported(spark, tmp_table_path)
     t.timeline.transition_to_inflight = explode
     try:
         with pytest.raises(RuntimeError, match="inflight"):
-            t.upsert(_df(spark, UPD))
+            run()
     finally:
         t.timeline.transition_to_inflight = orig_inflight
     assert _claims(t) == [], "early abort stranded its own claim"
     hb_dir = f"{t.meta_path}/heartbeat"
     assert t.fs.list_names(hb_dir) == [], "early abort stranded a heartbeat"
+    assert t.timeline.pending() == []
 
 
-def test_claim_released_on_requested_write_infra_failure(spark, tmp_table_path):
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"metrics_on": True, "metrics_reporter_type": "bogus"},
+        {"precommit_validators": "nonsense"},
+    ],
+    ids=["metrics", "precommit"],
+)
+@pytest.mark.parametrize("writer", WRITERS)
+def test_bad_config_fails_before_claim(spark, tmp_table_path, writer, bad):
+    """Every writer checks the metrics and precommit configs at entry: a
+    bad one raises before any claim or requested file exists."""
+    t, run = _writer(spark, tmp_table_path, writer)
+    before = t.timeline.instants()
+    for k, v in bad.items():
+        setattr(t.cfg, k, v)
+    with pytest.raises(ValueError, match="bogus|BOGUS|nonsense"):
+        run()
+    assert _claims(t) == []
+    assert t.timeline.instants() == before
+
+
+@pytest.mark.parametrize("op", ["upsert", "savepoint"])
+def test_claim_released_on_requested_write_infra_failure(
+    spark, tmp_table_path, op
+):
     """A non-OSError failure writing the requested file (own infra, not
     a create-once collision) happens on a millisecond WE claimed with
     no instant file on disk — the claim must be released directly, and
     the heartbeat refresher must not leave a fresh orphan behind
-    (code-review r7 follow-up)."""
+    (code-review r7 follow-up). Writers and table services share the
+    claim loop, so a savepoint releases its claim the same way."""
     t = HudiTable.create(spark, tmp_table_path, _mor_cfg())
+    t.bulk_insert(_df(spark, SEED))
 
     orig = t.timeline.create_requested
 
@@ -554,7 +665,10 @@ def test_claim_released_on_requested_write_infra_failure(spark, tmp_table_path):
     t.timeline.create_requested = explode
     try:
         with pytest.raises(RuntimeError, match="transport"):
-            t.upsert(_df(spark, UPD))
+            if op == "upsert":
+                t.upsert(_df(spark, UPD))
+            else:
+                t.savepoint()
     finally:
         t.timeline.create_requested = orig
     assert _claims(t) == [], "infra failure stranded its own claim"

@@ -20,7 +20,9 @@ Usage: python tools/scale_curve.py [mode] [sf_dir] [multipliers...]
 Defaults: cow, /root/testdata/sf0.1, multipliers 1 and 10
 (sf0.1 lineitem ≈ 600k rows → points at ~600k and ~6M rows).
 
-Prints one JSON line: {"mode": ..., "points": [...]}.
+Prints one JSON line: {"mode": ..., "points": [...]}. A point's
+``stages`` are the self and task seconds of each write layer during the
+timed upsert, from the ``perfbench.trace`` spans.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -59,18 +61,34 @@ def _build(spark, sf_dir: str, mult: int):
     ).dropDuplicates(["uid"])
 
 
-def _timed_upsert(t, batch) -> tuple[float, dict]:
-    from hudi_0_10_0_spark.operators.write import _StageTimer
+# the write layers whose spans make up a point's "stages"
+_WRITE_LAYERS = (
+    "tag_location", "assign_inserts", "write_instant_files", "collect_write_stats",
+)
+_tracer = None
 
-    records: list = []
-    _StageTimer.sink = records
+
+def _timed_upsert(t, batch) -> tuple[float, dict]:
+    """Wall time of one upsert, and the ``self_s`` and ``task_s`` of each
+    write layer it ran, from ``perfbench.trace`` spans. The tracer is
+    installed on the first call and stays on; its totals are reset
+    before each timed upsert."""
+    global _tracer
+    from perfbench import trace
+
+    if _tracer is None:
+        _tracer = trace.install(t.spark)
+    _tracer.collect_jobs()  # charge and drop the set-up's jobs
+    _tracer.stats.clear()
     t0 = time.perf_counter()
     t.upsert(batch)
     upsert_s = time.perf_counter() - t0
-    _StageTimer.sink = None
-    stages: dict = {}
-    for _op, stage, dt in records:
-        stages[stage] = round(stages.get(stage, 0.0) + dt, 3)
+    _tracer.collect_jobs()
+    stages = {
+        f"{layer}.{k}": round(_tracer.stats[f"write.{layer}"][k], 3)
+        for layer in _WRITE_LAYERS
+        for k in ("self_s", "task_s")
+    }
     return upsert_s, stages
 
 
